@@ -269,10 +269,10 @@ role_groups AS (
 # straight in the serial fraction); shared implementation in
 # envelope.cached_session_df
 def _cached_dim(spark: SparkSession, name: str, rows: list, schema: str) -> DataFrame:
-    from ..envelope import cached_session_df
+    from ..envelope import cached_session_df, local_frame
 
     return cached_session_df(
-        spark, ("dim", name), lambda: spark.createDataFrame(rows, schema)
+        spark, ("dim", name), lambda: local_frame(spark, rows, schema)
     )
 
 

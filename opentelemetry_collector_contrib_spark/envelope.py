@@ -26,12 +26,13 @@ _SESSION_DF_CACHE: "weakref.WeakKeyDictionary" = None  # built lazily
 
 def cached_session_df(spark, key, build) -> DataFrame:
     """Session-keyed DataFrame cache: ``build()`` runs once per
-    (session, key). ``createDataFrame`` costs ~0.5 s of driver
-    round-trip each, and dim frames built inside a bench's timed loop
-    land straight in the serial fraction. WeakKeyDictionary on the
-    SESSION OBJECT itself — not its id — so entries die with the
-    session and a recycled id can never serve a stale frame from a
-    stopped session (the subtlety both former copies of this pattern
+    (session, key). Building a small dim frame costs ~20 ms of driver
+    round-trip with :func:`local_frame` (~25-30 ms with
+    ``createDataFrame(<list>)``; 4-vCPU host, ``local[4]``), and dim
+    frames built inside a bench's timed loop land straight in the
+    serial fraction. WeakKeyDictionary on the SESSION OBJECT itself —
+    not its id — so entries die with the session and a recycled id can
+    never serve a stale frame from a stopped session (the subtlety both former copies of this pattern
     documented; one shared implementation now, r05 review)."""
     global _SESSION_DF_CACHE
     if _SESSION_DF_CACHE is None:
@@ -42,6 +43,35 @@ def cached_session_df(spark, key, build) -> DataFrame:
     if key not in per:
         per[key] = build()
     return per[key]
+
+
+def local_frame(spark, rows, schema: str | StructType) -> DataFrame:
+    """Driver-side rows (tuples in schema order) -> a DataFrame over a
+    ``LocalRelation``. ``schema`` is a DDL string or a ``StructType``.
+
+    ``spark.createDataFrame(<list>, schema)`` yields a ``LogicalRDD``
+    over a parallelized, pickled RDD: every scan of it (a broadcast
+    build side included) runs a job whose tasks start Python workers to
+    unpickle the rows. A pyarrow table goes to the JVM as Arrow batches
+    instead and becomes a ``LocalRelation`` (planned as a
+    ``LocalTableScan``: no job, no Python worker), whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. Every small
+    constant table the package builds on the driver goes through
+    here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    # strict: a row of the wrong width fails loudly, as it does in
+    # createDataFrame's schema check
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def try_element_at(col: Column | str, extraction) -> Column:
@@ -118,11 +148,12 @@ def _split(path: str) -> list[str]:
 
     parts, covered = [], 0
     for m in re.finditer(r"\[\"([^\"]*)\"\]|\['([^']*)'\]|([^.\[\]]+)", path):
-        parts.append(next(g for g in m.groups() if g is not None))
-        # separators between tokens may only be single dots
+        # separators between tokens may only be single dots, and
+        # nothing may precede the first token ('.foo' is a typo too)
         gap = path[covered : m.start()]
-        if gap not in ("", "."):
+        if gap not in (("", ".") if parts else ("",)):
             raise ValueError(f"malformed field path: {path!r}")
+        parts.append(next(g for g in m.groups() if g is not None))
         covered = m.end()
     if not parts or covered != len(path):
         raise ValueError(f"malformed field path: {path!r}")

@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .envelope import local_frame
 from .sources.table import SnapshotTable
 
 LINEAGE_SCHEMA = (
@@ -84,7 +85,8 @@ class CheckpointedWriter:
         )
         spark = df.sparkSession
         self.lineage.append(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (
                         run_id,

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from .envelope import local_frame
+
 
 @dataclass
 class MetricsCollector:
@@ -165,6 +167,8 @@ class MetricsCollector:
         ]
         for stage, metric, value in self.static:
             rows.append((self.run_id, stage, metric, value, now))
-        return spark.createDataFrame(
-            rows, "run_id string, stage string, metric string, value double, ts double"
+        return local_frame(
+            spark,
+            rows,
+            "run_id string, stage string, metric string, value double, ts double",
         )

@@ -781,8 +781,8 @@ SEVERITY_TEXT = {
 }
 
 
-# severity dim frames cached per (session, mapping): createDataFrame
-# costs ~0.5s of driver time and pipelines are often rebuilt per batch.
+# severity dim frames cached per (session, mapping): each build is a
+# driver round-trip and pipelines are often rebuilt per batch.
 # WeakKeyDictionary keyed on the session itself (NOT id(spark)): entries
 # die with the session, so a garbage-collected session can never alias a
 # reused CPython id onto a stale DataFrame bound to a dead JVM handle.
@@ -790,13 +790,13 @@ def _severity_dim(spark, rows: tuple):
     # session-keyed cache shared with the transcripts dims
     # (envelope.cached_session_df — one implementation of the
     # WeakKeyDictionary-on-the-session pattern)
-    from ..envelope import cached_session_df
+    from ..envelope import cached_session_df, local_frame
 
     return cached_session_df(
         spark,
         ("severity", rows),
-        lambda: spark.createDataFrame(
-            list(rows), "__sev_alias string, __sev_num int, __sev_text string"
+        lambda: local_frame(
+            spark, rows, "__sev_alias string, __sev_num int, __sev_text string"
         ),
     )
 

@@ -53,7 +53,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.ast import Call, Path, parse_statement
-from ..functions.ottl import compile_condition, compile_statement
+from ..functions.ottl import (
+    compile_condition,
+    compile_statement,
+    drop_cache_columns,
+)
 
 # flat metric-frame column -> metric.<path> field name
 # (internal/metric.go MetricPathGetSetter surface)
@@ -175,11 +179,22 @@ class DataPointTransform:
                 "value_int, not both (a NumberDataPoint holds one value "
                 "of one kind)"
             )
+        if written and "value" not in metrics.columns:
+            # flatten_datapoints binds the live path back to the flat
+            # ``value`` column; without one the write would vanish
+            raise ValueError(
+                f"statements write {sorted(written)} but the metric frame "
+                "has no 'value' column to hold it"
+            )
         live = written.pop() if written else "value_double"
         frame, mfields, orig = datapoint_frame(metrics, live_value=live)
         for stmt in self.statements:
             frame = compile_statement(stmt, error_mode=self.error_mode)(frame)
-        return flatten_datapoints(frame, mfields, orig, live_value=live)
+        # cache.* is statement-sequence scratch: drop it before the
+        # flatten passes new top-level columns through
+        return flatten_datapoints(
+            drop_cache_columns(frame), mfields, orig, live_value=live
+        )
 
 
 @dataclass

@@ -71,6 +71,9 @@ def write_routed(
         == "static"
     )
     if not static_overwrite:
+        # driver-bounded: one row per distinct route tag, i.e. at most
+        # the number of sinks in the routing table (metadata-scale),
+        # whatever the row count of ``tagged``
         this_run = {
             r[0]
             for r in tagged.select(route_col).distinct().collect()

@@ -27,6 +27,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..envelope import local_frame
+
 
 class SnapshotTable:
     def __init__(self, path: str):
@@ -135,5 +137,5 @@ class SnapshotTable:
                 raise ValueError("incremental read across an overwrite snapshot")
             files.extend(s["added"])
         if not files:
-            return spark.createDataFrame([], self.read(spark).schema)
+            return local_frame(spark, [], self.read(spark).schema)
         return spark.read.parquet(*files)

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..envelope import local_frame
 from .dedup import tokens
 
 SEP = "\x1f"
@@ -127,7 +128,8 @@ def bpe_learn(
             ).alias("s"),
             "freq",
         ).localCheckpoint()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_rank int, left_sym string, right_sym string, pair_count long",
     )

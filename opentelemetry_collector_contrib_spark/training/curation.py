@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..envelope import local_frame
 from .textstats import lang_col, quality_col
 
 
@@ -300,7 +301,7 @@ def _ordered_budget_prefix(
     for r in sorted(totals, key=lambda r: r["__pid__"]):
         offsets.append((r["__pid__"], run))
         run += int(r["t"] or 0)
-    off = spark.createDataFrame(offsets, "__pid__ int, __off__ bigint")
+    off = local_frame(spark, offsets, "__pid__ int, __off__ bigint")
     w = Window.partitionBy("__pid__").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

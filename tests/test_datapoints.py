@@ -181,6 +181,32 @@ def test_write_both_value_kinds_rejected(spark):
         )(_metrics(spark))
 
 
+def test_value_write_without_value_column_rejected(spark):
+    """A value_int/value_double write on a frame with no flat ``value``
+    column has nowhere to land: raise instead of dropping it."""
+    m = _metrics(spark).drop("value")
+    for stmt in ("set(value_double, 1.0)", "set(value_int, 1)"):
+        with pytest.raises(ValueError, match="no 'value' column"):
+            DataPointTransform([stmt])(m)
+    # statements that do not write a value still run on such a frame
+    out = DataPointTransform(['set(attributes["k"], "v")'])(m)
+    assert out.columns == m.columns
+
+
+def test_cache_columns_do_not_leak(spark):
+    """cache.* is statement-sequence scratch: it may feed later
+    statements but never reaches the flat output frame."""
+    m = _metrics(spark)
+    out = DataPointTransform(
+        [
+            'set(cache["name"], metric.name)',
+            'set(attributes["from_cache"], cache["name"])',
+        ]
+    )(m)
+    assert out.columns == m.columns
+    assert all(_attr(r, "from_cache") == r.metric_name for r in out.collect())
+
+
 def test_time_and_unix_nano_paths(spark):
     out = DataPointTransform(
         ['set(attributes["nano"], String(time_unix_nano))']

@@ -17,6 +17,10 @@ from opentelemetry_collector_contrib_spark.pipeline import (
 )
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_flagship_counts_match_duckdb_oracle(spark, duck, sf_dir):
     got = {
         (r["metric_name"], r["route"], r["role"]): r["count"]
@@ -78,13 +82,25 @@ def test_multi_match_duplicates_rows(spark, sf_dir):
 
 
 def test_metrics_collector_observes(spark, sf_dir):
+    import uuid
+
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     t = derive_transcripts(events)
     mc = MetricsCollector(run_id="r1")
     p = TranscriptPipeline(collector=mc)
     routed, counts = p(t)
     routed.count()  # action triggers observations
-    snap = {(r["stage"], r["metric"]): r["value"] for r in mc.snapshot(spark).collect()}
+    # the snapshot is a driver-side table: collecting it launches no
+    # Spark job (a parallelized list would, with Python workers)
+    sc = spark.sparkContext
+    grp = f"snapshot-{uuid.uuid4().hex}"
+    sc.setJobGroup(grp, grp)
+    try:
+        rows = mc.snapshot(spark).collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(grp) == []
+    snap = {(r["stage"], r["metric"]): r["value"] for r in rows}
     assert snap[("receiver", "rows")] == 1000
     assert snap[("router", "rows")] == 1000
     assert snap[("router", "errors")] > 0
@@ -94,13 +110,20 @@ def test_flagship_plan_shape_guard(spark, sf_dir):
     """Physical-plan regression guard for the scale properties SURVEY §8
     documents: enrich joins stay broadcast, no sort-merge joins or
     cartesian products sneak in, and the whole DAG costs at most two
-    exchanges (derive row_number + the count aggregate)."""
+    exchanges (derive row_number + the count aggregate). The DAG is
+    UDF-free, so no Python worker may start in it: the driver-built
+    dims (enrich, severity alias) are LocalRelations, not a LogicalRDD
+    over a parallelized list, and each broadcast build side is a
+    LocalTableScan."""
     import io
     import contextlib
 
     from opentelemetry_collector_contrib_spark.pipeline import run_flagship
 
     df = run_flagship(spark, sf_dir)
+    optimized = _optimized_plan(df)
+    assert "LogicalRDD" not in optimized, optimized
+    assert "LocalRelation" in optimized, optimized
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -108,6 +131,7 @@ def test_flagship_plan_shape_guard(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
+    assert "LocalTableScan" in plan
     # Exchanges: derive's row_number + ONE for the grouping-sets count
     # (+ the final orderBy range exchange); broadcast exchanges excluded
     shuffles = [
@@ -131,3 +155,49 @@ def test_salting_spreads_hot_conversations(spark):
         F.split(F.col("conv_salt"), "#")[0] != F.col("conv_id")
     ).count()
     assert bad == 0
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """local_frame gives the schema and rows createDataFrame gives, for
+    every schema the package builds a driver-side table with: int vs
+    long, double, string, nulls, zero rows, and a StructType of
+    timestamps, maps and binary (the empty SnapshotTable read)."""
+    from opentelemetry_collector_contrib_spark.data.transcripts import (
+        ROLE_GROUPS,
+        TOOL_CATALOG,
+    )
+    from opentelemetry_collector_contrib_spark.envelope import (
+        ENVELOPE_SCHEMA,
+        local_frame,
+    )
+    from opentelemetry_collector_contrib_spark.lineage import LINEAGE_SCHEMA
+
+    cases = [
+        (TOOL_CATALOG, "tool string, tool_category string, risk_level string"),
+        (ROLE_GROUPS, "role string, role_group string"),
+        (
+            [("error", 17, "ERROR"), ("x", None, None)],
+            "__sev_alias string, __sev_num int, __sev_text string",
+        ),
+        (
+            [("r", "receiver", "rows", 1000.0, 1.7e9), ("r", "s", "m", None, 0.5)],
+            "run_id string, stage string, metric string, value double, ts double",
+        ),
+        (
+            [("run", "/t/sink", 0, 2**40, 12, "committed", 1.7e9)],
+            LINEAGE_SCHEMA,
+        ),
+        ([(0, 0), (1, 2**40 + 7), (2, None)], "__pid__ int, __off__ bigint"),
+        (
+            [(0, "a", "b", 2**33), (1, "ab", "c", 1)],
+            "merge_rank int, left_sym string, right_sym string, pair_count long",
+        ),
+        ([], ENVELOPE_SCHEMA),
+    ]
+    for rows, schema in cases:
+        for data in (rows, []):
+            want = spark.createDataFrame(data, schema)
+            got = local_frame(spark, data, schema)
+            assert got.schema == want.schema, schema
+            assert got.collect() == want.collect(), schema
+            assert "LocalRelation" in _optimized_plan(got)

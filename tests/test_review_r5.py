@@ -25,7 +25,10 @@ def test_malformed_field_path_rejected(spark):
     df = spark.createDataFrame(
         [("x", {"k": "v"})], "body string, attributes map<string,string>"
     )
-    for bad in ("attributes[]", "attributes[k]", "", "a..b", "attributes."):
+    for bad in (
+        "attributes[]", "attributes[k]", "", "a..b", "attributes.", ".foo",
+        ".attributes.k",
+    ):
         with pytest.raises(ValueError, match="malformed field path"):
             field_delete(df, bad)
     # well-formed paths still parse
